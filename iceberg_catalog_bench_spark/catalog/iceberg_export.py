@@ -41,9 +41,11 @@ from .table import (
     _HIVE_NULL,
     _META_DIR,
     _META_FILE,
+    _POS_DELETE_DDL,
     LakeTable,
     _decode_path_uri,
     _strip_scheme,
+    local_frame,
 )
 from .transforms import Transform
 
@@ -2567,7 +2569,7 @@ def read_via_iceberg_metadata(
         ddl = ", ".join(
             f"{f['name']} {_spark_ddl_type(f['type'])}" for f in target["fields"]
         )
-        return spark.createDataFrame([], ddl)
+        return local_frame(spark, [], ddl)
     # Iceberg resolves columns by FIELD ID: for each file generation,
     # map the target schema's ids onto that generation's names (renames
     # and widenings never rewrote the files), defaulting added columns.
@@ -2603,7 +2605,7 @@ def read_via_iceberg_metadata(
         # merge-on-read, content=1: (file_path, pos) tombstones applied
         # as a broadcast anti-join; the delete parquet may spell paths
         # as URIs (file:///...) — normalize both sides
-        tomb = spark.read.parquet(*delete_paths).select(
+        tomb = spark.read.schema(_POS_DELETE_DDL).parquet(*delete_paths).select(
             F.regexp_replace("file_path", "^file:/+", "/").alias("file_path"),
             "pos",
         )
@@ -2619,7 +2621,7 @@ def read_via_iceberg_metadata(
         seq_rows = [
             (f, seq) for files in by_schema.values() for f, seq in files
         ]
-        seq_map = spark.createDataFrame(seq_rows, "_seq_path string, _file_seq long")
+        seq_map = local_frame(spark, seq_rows, "_seq_path string, _file_seq long")
         stripped = F.regexp_replace(F.col("_ice_file"), "^file:/+", "/")
         out = out.join(
             F.broadcast(seq_map), stripped == seq_map["_seq_path"], "left"

@@ -81,7 +81,9 @@ def _run_to_file_sink(df: DataFrame) -> DataFrame:
     try:
         return spark.read.schema(df.schema).parquet(d + "/out")
     except Exception:  # no files written (empty result stream)
-        return spark.createDataFrame([], df.schema)
+        from ..catalog.table import local_frame
+
+        return local_frame(spark, [], df.schema)
 
 
 @register(

@@ -973,6 +973,22 @@ def test_migrate_parquet_inplace(spark, tmp_path):
     assert len(glob.glob(d + "/legacy/*.parquet")) == 4  # source untouched
 
 
+def test_migrate_parquet_nested_leaf_stats_keep_their_path(spark, tmp_path):
+    """An external file's struct leaf ``meta.n`` records its stats under
+    the dotted path, never under the bare name of the same-named
+    top-level column ``n`` (whose range pruning would then skip a file
+    that holds the row)."""
+    d = str(tmp_path)
+    spark.range(100, 201).selectExpr(
+        "id as n", "named_struct('n', cast(id % 10 as bigint)) as meta"
+    ).coalesce(1).write.parquet(d + "/legacy")
+    t = LakeTable.migrate_parquet(spark, d + "/legacy", d + "/t")
+    (entry,) = t._snapshot().files
+    assert entry.stats["n"] == [100, 200]
+    assert entry.stats["meta.n"] == [0, 9]
+    assert t.scan("n = 150").count() == 1
+
+
 def test_iceberg_export_global_partition_field_ids(spark, tmp_path):
     """Partition field-ids are TABLE-WIDE (Iceberg spec): assigned once
     per (source, transform) starting at 1000, never reused, stable
